@@ -40,7 +40,8 @@ class SkewType(enum.Enum):
 # Estimator for per-key frequencies driving the replication factor.
 #   exact  — distributed groupBy().count() capped at max_hot_keys (default;
 #            no over-estimation, safe for outer joins — SURVEY §4 Q4).
-#   cms    — Count-Min Sketch built via mapPartitions + treeReduce
+#   cms    — Count-Min Sketch per side, each built by one JVM
+#            groupBy(row, column).count() over hashed cell indices
 #            (scales when even the hot-key histogram is too big; biased
 #            upward by eps*N, so outer joins may over-replicate — kept
 #            semantically safe because replication only multiplies salt

@@ -150,7 +150,8 @@ def _hot_key_rows(
 def _hot_key_rows_cms(
     left: DataFrame, right: DataFrame, keys: Sequence[str], conf: SkewJoinConf
 ) -> list[tuple]:
-    """CMS estimator: sketch both sides (mapPartitions + treeReduce), find
+    """CMS estimator: sketch each side (one JVM cell-count aggregation
+    per ``cms_from_dataframe`` call, no Python worker), find
     hot-key *candidates* from a Bernoulli sample (a key with freq >= thr
     appears in a frac-sample w.p. 1-(1-frac)^thr ≈ 1), then look their
     frequencies up in the sketches driver-side. Nothing bigger than the

@@ -1,4 +1,4 @@
-"""Count-Min Sketch with a vectorized, JVM-hashed distributed builder.
+"""Count-Min Sketch with a single-aggregation JVM builder.
 
 Plays the role of Algebird's ``CMS[String]`` in the reference
 (``/root/reference/src/main/scala/org/anish/spark/skew/Utils.scala:92-122``):
@@ -6,57 +6,47 @@ a mergeable frequency summary built over a key column and broadcast to
 executors. Differences by design (SURVEY §2 O3):
 
 * the reference builds one sketch **per record** and reduces pairwise
-  (``Utils.scala:119-120``); we hash keys **in the JVM** (``F.xxhash64`` —
-  codegen, no Python per-row work), scatter-add them into per-partition
-  tables with numpy ``bincount`` inside Arrow-batched ``mapInPandas``, and
-  merge partition sketches through one combine stage + driver fold;
-* row hashing: XXH64(utf8(key), seed 42) exactly as Spark computes it, then
-  Kirsch–Mitzenmacher double hashing ``idx_d = (h1 + d*h2) mod width`` with
-  ``h1/h2`` derived from the 64-bit hash by splitmix64 — so driver-side
-  ``estimate(key)`` (pure Python XXH64, pinned to Spark by test) and
-  executor-side builds agree bit-for-bit;
+  (``Utils.scala:119-120``); we compute every row's ``depth`` cell indices
+  **in the JVM** (codegen, no Python worker) and count them with one
+  ``groupBy(pos, col).count()`` — partial aggregation bounds each task's
+  map at depth × width groups, and the driver collects at most that many
+  cells as Arrow and scatters them into the table;
+* row hashing: XXH64(utf8(key), seed 42) exactly as Spark computes it,
+  ``x = hash XOR seed``, then Kirsch–Mitzenmacher double hashing
+  ``idx_d = (h1 + d*h2) mod width`` with ``h1 = x & 0xFFFFFFFF`` and
+  ``h2 = (x >>> 32) | 1`` (the split Spark's ``BloomFilterImpl`` uses).
+  ``h1 + d*h2 < 19 * 2^32`` never overflows a long, so the JVM form is
+  safe under ANSI mode, and the numpy paths (``add_hashed``,
+  ``estimate_hashed``) and driver-side ``estimate(key)`` (pure Python
+  XXH64, pinned to Spark by test) agree with it bit-for-bit;
 * composite keys join with a NUL separator (no concat collisions, SURVEY §4
   Q1); rows with any null key column are skipped (null keys never
   equi-match).
 
 At the reference defaults (eps=0.005, delta=1e-8) the table is
-19 × 544 int64 ≈ 83 KB — trivially broadcastable to 1000 executors; the
-two-level merge keeps driver traffic at ``min(P, combine) + combine``
-sketches. Caveat: keys are compared through their Spark ``CAST(x AS
-STRING)`` form — don't sketch double-typed join keys.
+19 × 544 int64 ≈ 83 KB — trivially broadcastable to 1000 executors.
+Caveat: keys are compared through their Spark ``CAST(x AS STRING)`` form —
+don't sketch double-typed join keys.
 """
 
 from __future__ import annotations
 
 import math
-import pickle
 from collections.abc import Iterable
 
 import numpy as np
 
-from .xxh64 import xxh64
+from .xxh64 import to_signed64, xxh64
 
 _M = (1 << 64) - 1
-_SM1 = 0x9E3779B97F4A7C15
-_SM2 = 0xBF58476D1CE4E5B9
-_SM3 = 0x94D049BB133111EB
+_LO32 = 0xFFFFFFFF
 
 KEY_SEP = "\x00"
 
-
-def _splitmix(x: int) -> int:
-    z = (x + _SM1) & _M
-    z = ((z ^ (z >> 30)) * _SM2) & _M
-    z = ((z ^ (z >> 27)) * _SM3) & _M
-    return z ^ (z >> 31)
-
-
-def _splitmix_np(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        z = x + np.uint64(_SM1)
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(_SM2)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(_SM3)
-        return z ^ (z >> np.uint64(31))
+# Version of the hash → cell derivation, carried in pickles and checked
+# by merge/inner_product.  1: h1/h2 from splitmix64 (sketches pickled by
+# the older mapInPandas builder); 2: the 32-bit split described above.
+HASH_VERSION = 2
 
 
 class CountMinSketch:
@@ -66,7 +56,9 @@ class CountMinSketch:
     estimate(k) <= true_freq(k) + eps * N with probability >= 1 - delta.
     """
 
-    __slots__ = ("eps", "delta", "seed", "depth", "width", "table", "total")
+    __slots__ = (
+        "eps", "delta", "seed", "depth", "width", "table", "total", "hash_version"
+    )
 
     def __init__(self, eps: float = 0.005, delta: float = 1e-8, seed: int = 1):
         if not (0 < eps < 1) or not (0 < delta < 1):
@@ -78,19 +70,27 @@ class CountMinSketch:
         self.width = max(1, math.ceil(math.e / eps))
         self.table = np.zeros((self.depth, self.width), dtype=np.int64)
         self.total = 0
+        self.hash_version = HASH_VERSION
 
     # -- hashing -----------------------------------------------------------
-    def _h12(self, key: object) -> tuple[int, int]:
-        data = key if isinstance(key, bytes) else str(key).encode("utf-8")
-        h = xxh64(data)  # seed 42, identical to Spark's F.xxhash64
-        h1 = _splitmix(h ^ (self.seed & _M))
-        h2 = _splitmix(h1) | 1  # odd → full cycle mod width
-        return h1, h2
+    def _cells(self, hashes: np.ndarray) -> np.ndarray:
+        """(depth, n) column indices for Spark ``xxhash64`` values (int64
+        or uint64 array) — the numpy twin of ``_cell_counts``."""
+        if self.hash_version != HASH_VERSION:
+            raise ValueError(
+                f"CMS hash derivation v{self.hash_version} is not supported "
+                f"(current: v{HASH_VERSION}); rebuild the sketch"
+            )
+        x = hashes.astype(np.int64).view(np.uint64) ^ np.uint64(self.seed & _M)
+        h1 = x & np.uint64(_LO32)
+        h2 = (x >> np.uint64(32)) | np.uint64(1)  # odd → full cycle mod width
+        d = np.arange(self.depth, dtype=np.uint64)[:, None]
+        return ((h1 + d * h2) % np.uint64(self.width)).astype(np.int64)
 
     def _cols(self, key: object) -> np.ndarray:
-        h1, h2 = self._h12(key)
-        idx = (h1 + np.arange(self.depth, dtype=np.uint64) * np.uint64(h2)) & np.uint64(_M)
-        return (idx % np.uint64(self.width)).astype(np.int64)
+        data = key if isinstance(key, bytes) else str(key).encode("utf-8")
+        # seed 42, identical to Spark's F.xxhash64
+        return self._cells(np.array([to_signed64(xxh64(data))]))[:, 0]
 
     # -- updates -----------------------------------------------------------
     def add(self, key: object, count: int = 1) -> None:
@@ -107,15 +107,10 @@ class CountMinSketch:
         array straight out of Arrow)."""
         if len(hashes) == 0:
             return
-        h = hashes.astype(np.int64).view(np.uint64)
-        h1 = _splitmix_np(h ^ np.uint64(self.seed & _M))
-        h2 = _splitmix_np(h1) | np.uint64(1)
-        with np.errstate(over="ignore"):
-            for d in range(self.depth):
-                idx = (h1 + np.uint64(d) * h2) % np.uint64(self.width)
-                self.table[d] += np.bincount(
-                    idx.astype(np.int64), minlength=self.width
-                )
+        flat = self._cells(hashes) + np.arange(self.depth)[:, None] * self.width
+        self.table += np.bincount(
+            flat.ravel(), minlength=self.depth * self.width
+        ).reshape(self.depth, self.width)
         self.total += len(hashes)
 
     def estimate(self, key: object) -> int:
@@ -125,11 +120,13 @@ class CountMinSketch:
         """Estimate from a precomputed Spark ``xxhash64`` value (signed
         int64) — the lookup twin of ``add_hashed``, so callers that
         already hold JVM hashes never re-hash in Python."""
-        h1 = _splitmix((h & _M) ^ (self.seed & _M))
-        h2 = _splitmix(h1) | 1
-        idx = (h1 + np.arange(self.depth, dtype=np.uint64) * np.uint64(h2)) & np.uint64(_M)
-        cols = (idx % np.uint64(self.width)).astype(np.int64)
+        cols = self._cells(np.array([h], dtype=np.int64))[:, 0]
         return int(self.table[np.arange(self.depth), cols].min())
+
+    def _check_compatible(self, other: "CountMinSketch", what: str) -> None:
+        params = ("depth", "width", "seed", "hash_version")
+        if any(getattr(self, p) != getattr(other, p) for p in params):
+            raise ValueError(f"cannot {what} CMS with different parameters")
 
     def inner_product(self, other: "CountMinSketch") -> int:
         """Estimate of ``Σ_k f_self(k) · f_other(k)`` — the row count of
@@ -137,35 +134,31 @@ class CountMinSketch:
         (Cormode–Muthukrishnan §4.2).  Never undershoots; overshoots by
         ≤ eps·N_self·N_other w.p. ≥ 1-delta.  Relational twin:
         ``operators/joinest.py::join_size_estimate``."""
-        if (self.depth, self.width, self.seed) != (
-            other.depth,
-            other.width,
-            other.seed,
-        ):
-            raise ValueError("cannot inner-product CMS with different parameters")
+        self._check_compatible(other, "inner-product")
         return int((self.table * other.table).sum(axis=1).min())
 
     # -- monoid ------------------------------------------------------------
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        if (self.depth, self.width, self.seed) != (
-            other.depth,
-            other.width,
-            other.seed,
-        ):
-            raise ValueError("cannot merge CMS with different parameters")
+        self._check_compatible(other, "merge")
         out = CountMinSketch(self.eps, self.delta, self.seed)
         out.table = self.table + other.table
         out.total = self.total + other.total
         return out
 
     def __reduce__(self):  # compact pickling for shuffle/broadcast
-        return (_rebuild_cms, (self.eps, self.delta, self.seed, self.table, self.total))
+        return (
+            _rebuild_cms,
+            (self.eps, self.delta, self.seed, self.table, self.total,
+             self.hash_version),
+        )
 
 
-def _rebuild_cms(eps, delta, seed, table, total):
+def _rebuild_cms(eps, delta, seed, table, total, hash_version=1):
+    # pickles without a version predate HASH_VERSION 2
     cms = CountMinSketch(eps, delta, seed)
     cms.table = table
     cms.total = total
+    cms.hash_version = hash_version
     return cms
 
 
@@ -178,50 +171,55 @@ def spark_key_expr(key_cols: list[str]):
     return F.concat_ws(KEY_SEP, *[F.col(c).cast("string") for c in key_cols])
 
 
+def _cell_counts(df, key_cols: list[str], depth: int, width: int, seed: int):
+    """The sketch's non-zero cells as a DataFrame ``(pos, col, count)``:
+    row (depth index), column, and how many non-null key tuples hash
+    there — one whole-stage-codegen aggregation, at most depth × width
+    rows."""
+    from pyspark.sql import functions as F
+
+    filtered = df
+    for c in key_cols:
+        filtered = filtered.where(F.col(c).isNotNull())
+    # x gets its own projection below the explode: written inline, the
+    # optimizer would recompute the string cast and xxhash64 per cell
+    hashed = filtered.select(
+        F.xxhash64(spark_key_expr(key_cols))
+        .bitwiseXOR(F.lit(to_signed64(seed & _M)))
+        .alias("x")
+    )
+    x, pos = F.col("x"), F.col("pos")
+    h1 = x.bitwiseAND(F.lit(_LO32))
+    h2 = F.shiftrightunsigned(x, 32).bitwiseOR(F.lit(1))
+    rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1)))
+    return (
+        hashed.select(rows.alias("pos"), x)
+        .select(pos, ((h1 + pos * h2) % F.lit(width)).alias("col"))
+        .groupBy("pos", "col")
+        .count()
+    )
+
+
 def cms_from_dataframe(
     df,
     key_cols: list[str],
     eps: float = 0.005,
     delta: float = 1e-8,
     seed: int = 1,
-    combine_partitions: int = 8,
 ) -> CountMinSketch:
     """Distributed CMS over the tuple of ``key_cols``.
 
-    Plan: column-pruned scan → JVM xxhash64 (codegen) → Arrow batches →
-    numpy bincount per partition → one combine stage (``combine_partitions``
-    groups) → driver fold. Python never touches individual keys; the only
-    data crossing the Python boundary is 8-byte hashes and 83 KB sketches.
+    Plan: column-pruned scan → non-null filter → ``x`` (xxhash64 XOR
+    seed) → explode over the ``depth`` rows → cell index
+    ``(h1 + pos*h2) mod width`` → partial and final
+    ``groupBy(pos, col).count()``, all whole-stage codegen → Arrow
+    collect of ≤ depth × width cells → numpy scatter on the driver. No
+    Python worker starts and nothing is pickled.
     """
-    from pyspark.sql import functions as F
-
-    filtered = df
-    for c in key_cols:
-        filtered = filtered.where(F.col(c).isNotNull())
-    hashed = filtered.select(F.xxhash64(spark_key_expr(key_cols)).alias("h"))
-
-    def build(batches):
-        import pandas as pd
-
-        local = CountMinSketch(eps, delta, seed)
-        for pdf in batches:
-            local.add_hashed(pdf["h"].to_numpy())
-        yield pd.DataFrame({"sketch": [pickle.dumps(local)]})
-
-    def combine(batches):
-        import pandas as pd
-
-        acc = CountMinSketch(eps, delta, seed)
-        for pdf in batches:
-            for blob in pdf["sketch"]:
-                acc = acc.merge(pickle.loads(blob))
-        yield pd.DataFrame({"sketch": [pickle.dumps(acc)]})
-
-    level1 = hashed.mapInPandas(build, "sketch binary")
-    level2 = level1.repartition(combine_partitions).mapInPandas(
-        combine, "sketch binary"
-    )
     out = CountMinSketch(eps, delta, seed)
-    for row in level2.collect():
-        out = out.merge(pickle.loads(row["sketch"]))
+    cells = _cell_counts(df, key_cols, out.depth, out.width, seed).toArrow()
+    out.table[
+        cells.column("pos").to_numpy(), cells.column("col").to_numpy()
+    ] = cells.column("count").to_numpy()
+    out.total = int(out.table[0].sum())
     return out

@@ -22,7 +22,7 @@ at 99% confidence (the Apache DataSketches calibration of the same
 algorithm); ``rank_error_bound()`` reports a conservative 2·1.65%/√(k/200)
 envelope that the registry query gates on in-query.
 
-Spark integration mirrors cms.py/hll.py: column-pruned scan → Arrow
+Spark integration mirrors hll.py: column-pruned scan → Arrow
 batches → numpy per-partition sketches → one combine stage → driver
 fold.  Only float64 buffers of bounded size (~3k items) ever cross the
 Python boundary.
@@ -360,7 +360,7 @@ def kll_compat_by_group(df, group_col: str, key_col: str, value_col: str,
 def kll_from_dataframe(df, value_col: str, k: int = 200, seed: int = 1,
                        combine_partitions: int = 8) -> KLL:
     """Distributed KLL over a numeric column (NULLs skipped).  Same
-    two-level mapInPandas shape as cms_from_dataframe: per-partition
+    two-level mapInPandas shape as hll_from_dataframe: per-partition
     sketches → bounded combine stage → driver fold; only ~3k-float64
     buffers cross the Python boundary."""
     from pyspark.sql import functions as F

@@ -1,5 +1,7 @@
 """CMS unit/property tests (SURVEY §5.5): ε/δ accuracy vs exact counts,
-monoid merge associativity, distributed builder parity, empty input."""
+monoid merge associativity, distributed builder parity (bit-identical to
+the Python derivation, ANSI on and off), a Python-free build plan, the
+hash-derivation version check, empty input."""
 
 from __future__ import annotations
 
@@ -107,3 +109,75 @@ def test_estimate_hashed_matches_estimate(spark):
     }
     for k in keys:
         assert cms.estimate_hashed(hashes[k]) == cms.estimate(k) >= 3
+
+
+def _builder_cases(spark):
+    """(DataFrame, key_cols, python keys): bigint, composite string, nulls."""
+    big = [(i * 7919 % 301 - 150,) for i in range(3_000)]
+    comp = [(f"a{i % 13}", f"b{i % 5}") for i in range(2_000)]
+    comp += [("ab", "c")] * 40 + [("a", "bc")] * 3
+    nulls = [(None, "x")] * 50 + [("k", None)] * 20 + [
+        (f"k{i % 9}", f"v{i % 4}") for i in range(500)
+    ]
+    return [
+        (spark.createDataFrame(big, "k bigint"), ["k"],
+         [str(k) for (k,) in big]),
+        (spark.createDataFrame(comp, "k1 string, k2 string"), ["k1", "k2"],
+         [f"{a}\x00{b}" for a, b in comp]),
+        (spark.createDataFrame(nulls, "k1 string, k2 string"), ["k1", "k2"],
+         [f"{a}\x00{b}" for a, b in nulls if a is not None and b is not None]),
+    ]
+
+
+def test_builder_bit_identical_to_add_all(spark):
+    """The JVM builder and the Python derivation agree cell for cell —
+    also with ANSI mode on, which the builder's arithmetic must survive."""
+    import numpy as np
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for df, cols, keys in _builder_cases(spark):
+                built = cms_from_dataframe(df, cols, seed=3)
+                expect = CountMinSketch(seed=3).add_all(keys)
+                assert np.array_equal(built.table, expect.table), (ansi, cols)
+                assert built.total == expect.total == len(keys), (ansi, cols)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_builder_plan_has_no_python_exec(spark):
+    from spark_skew_join_spark.sketch.cms import _cell_counts
+
+    df = spark.createDataFrame([(i % 11, f"s{i}") for i in range(200)],
+                               "k bigint, s string")
+    cells = _cell_counts(df, ["k", "s"], depth=4, width=64, seed=1)
+    assert len(cells.collect()) <= 4 * 64
+    plan = cells._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan
+    for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
+
+
+def test_old_derivation_pickle_is_rejected():
+    """A sketch pickled before the hash-derivation version existed (a
+    5-argument ``_rebuild_cms``) must not merge with, or answer like,
+    a current one."""
+    import pickle
+
+    import pytest
+
+    from spark_skew_join_spark.sketch.cms import HASH_VERSION, _rebuild_cms
+
+    cur = CountMinSketch().add_all(["a", "b", "a"])
+    assert pickle.loads(pickle.dumps(cur)).merge(cur).total == 6
+    old = _rebuild_cms(cur.eps, cur.delta, cur.seed, cur.table.copy(), cur.total)
+    assert old.hash_version < HASH_VERSION
+    for a, b in ((cur, old), (old, cur)):
+        for op in (a.merge, a.inner_product):
+            with pytest.raises(ValueError, match="different parameters"):
+                op(b)
+    with pytest.raises(ValueError, match="hash derivation"):
+        old.estimate("a")

@@ -49,6 +49,32 @@ def test_cross_skew_both_sides(spark, zipf_left, zipf_right):
     assert_df_equal(actual, plain(zipf_left, r, ["k"], "inner"))
 
 
+@pytest.mark.parametrize("estimator", ["exact", "cms"])
+def test_cross_skew_small(spark, estimator):
+    """Default-run CrossSkew: key 1 is hot on BOTH sides, so both sides
+    fragment it; keys 2 and 3 are hot on one side only."""
+    from spark_skew_join_spark.operators.skew_join import _hot_key_rows
+
+    left = spark.createDataFrame(
+        [(1, f"l{i}") for i in range(400)] + [(2, f"l{i}") for i in range(200)]
+        + [(3 + i % 300, f"l{i}") for i in range(2_400)],
+        "k bigint, pl string",
+    )
+    right = spark.createDataFrame(
+        [(1, f"r{i}") for i in range(30)] + [(3, f"r{i}") for i in range(150)]
+        + [(3 + i % 300, f"r{i}") for i in range(1_500)],
+        "k bigint, pr string",
+    )
+    conf = SkewJoinConf(
+        replication_factor=0.1, hot_threshold=20,
+        estimator=estimator, sample_fraction=0.5,
+    )
+    hot = {r[0]: r[1:] for r in _hot_key_rows(left, right, ["k"], conf, 8)}
+    assert min(hot[1]) >= 20  # hot on both sides → CrossSkew
+    actual = skew_join(left, right, "k", "inner", conf)
+    assert_df_equal(actual, plain(left, right, ["k"], "inner"))
+
+
 @pytest.mark.parametrize("skew_type", [SkewType.LEFT, SkewType.RIGHT, SkewType.CROSS])
 def test_skew_type_gating(spark, zipf_left, uniform_right, skew_type):
     conf = SkewJoinConf(

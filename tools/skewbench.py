@@ -4,8 +4,8 @@ record wall-clock + per-partition percentiles for
 (4) AQE skew-join — the standing baseline for the 2x perf gate.
 
 Prints one JSON line. Synthetic data: left 2M rows, Zipf-ish keys over 5k
-values (hottest key ~28% of rows), right one row per key — the
-fragment-replicate sweet spot (small side not broadcastable in the test
+values (hottest key ~49% of rows: (1/5000)^(1/12)), right one row per
+key — the fragment-replicate sweet spot (small side not broadcastable in the test
 setup: autoBroadcastJoinThreshold=-1 to force the shuffle path).
 """
 
